@@ -345,7 +345,7 @@ def main() -> None:
 
         # r10 verdict item #2: bench ACROSS the conf cutover. Every
         # corpus above (sf0.1 17 MiB, native sf1 186 MiB) sits BELOW
-        # _AQE_MIN_BYTES (256 MiB), so the at-scale conf path — AQE
+        # ScalePolicy.cutover (256 MiB), so the at-scale conf path — AQE
         # on, SMJ preference back, stock range-partitioned terminal
         # sorts — had zero bench measurements. A native sf3 (~560 MiB)
         # is the smallest corpus that crosses the flip; record per-

@@ -26,6 +26,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from citus_spark.scale import ScalePolicy, corpus_policy, fanout_width, tree_stat
+
 ALL_TABLES = (
     "region",
     "nation",
@@ -67,16 +69,11 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 
 
 def load_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table present in sf_dir as a temp view.
+    """Register every test table present in sf_dir as a temp view and
+    apply the corpus's ScalePolicy confs to `spark`.
 
-    events.ts normalization (fixture generations differ):
-    TIMESTAMP(NANOS) parquet surfaces as a long under
-    spark.sql.legacy.parquet.nanosAsLong=true → integer-div to micros
-    (the long exceeds double precision); TIMESTAMP(MICROS
-    isAdjustedToUTC=false) surfaces as TIMESTAMP_NTZ → cast to the
-    session type (UTC session zone, so wall-clock values are
-    unchanged, matching DuckDB's naive read). Either way every query
-    sees a plain TIMESTAMP column.
+    Every query sees a plain TIMESTAMP for each timestamp column,
+    whatever the fixture generation wrote (see normalize_events_ts).
     """
     from pyspark.sql import functions as F
 
@@ -86,95 +83,43 @@ def load_views(spark: SparkSession, sf_dir: str) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     _ship_package(spark)
 
-    # Corpus-sized session confs are applied on EVERY call (not just
-    # first registration): Spark reads these confs at execution time,
-    # so a session alternating between two corpora would otherwise
-    # execute corpus-B queries under corpus-A's AQE/reducer settings
-    # (r7 verdict finding #3). Re-applying is 4 runtime-settable
-    # conf.set calls (~1 ms); the expensive work (tree walk, parquet
-    # footer reads, view registration) stays behind the idempotent
-    # guard below. The contract this gives: a query built via
-    # load_views(dir) and executed before the next load_views call —
-    # the pattern every registry wrapper and the driver follow — runs
-    # under its own corpus's confs.
-    key = os.path.abspath(sf_dir)
-    paths = {
-        t: os.path.join(sf_dir, f"{t}.parquet")
-        for t in ALL_TABLES
-        if os.path.exists(os.path.join(sf_dir, f"{t}.parquet"))
-    }
+    # The corpus's ScalePolicy (citus_spark/scale.py) owns every
+    # scale-dependent conf; they are applied to THIS session on EVERY
+    # call, not just at first registration: Spark reads them at
+    # execution time, so a session alternating between two corpora
+    # would otherwise execute corpus-B queries under corpus-A's
+    # AQE/reducer settings (r7 verdict finding #3). Re-applying is five
+    # runtime-settable conf.set calls plus the one corpus walk per call
+    # that fingerprints it (a stat per table file); the expensive work
+    # (view registration, parquet footer reads) stays behind the
+    # fingerprint guard below. The policy is kept on the session, so
+    # the readers that run while a query is built (scale_policy) never
+    # walk the corpus again. The contract this gives: a query built
+    # via load_views(dir) and executed before the next load_views call
+    # — the pattern every registry wrapper and every entry() caller
+    # follow — runs under its own corpus's confs and policy. They stay
+    # on the caller's session, not a child session: the benchmark and
+    # entry() callers read them back from the session they passed.
+    paths = _table_paths(sf_dir)
     if not paths:
         # fail loudly rather than silently querying stale temp views
         raise FileNotFoundError(f"no *.parquet test tables under {sf_dir}")
-
-    # Size the parquet split to the corpus: floor 16 MiB (below that,
-    # task-scheduling overhead dominates sub-second queries — measured
-    # −20-30% on the floor-bound headline set vs 4 MiB), ceiling the
-    # Spark default 128 MiB (the right number when files outnumber
-    # cores, i.e. at real scale). The middle expression matters only
-    # between ~1 GiB and ~8 TiB of input on 32 cores, where splitting
-    # to ~2 waves per core beats fixed sizes. (Sizes are cached per
-    # dir — fixture dirs are immutable driver artifacts.)
-    if key in _CORPUS_BYTES:
-        total = _CORPUS_BYTES[key]
-    else:
-        total = sum(_tree_bytes(p) for p in paths.values())
-        _CORPUS_BYTES[key] = total
     par = spark.sparkContext.defaultParallelism or 8
-    split = max(16 << 20, min(128 << 20, total // (2 * par) or 1))
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+    policy = corpus_policy(sf_dir, paths, par)
+    spark._citus_policies = {
+        **getattr(spark, "_citus_policies", {}),
+        os.path.abspath(sf_dir): policy,
+    }
+    for k, v in policy.confs().items():
+        spark.conf.set(k, v)
 
-    # Runtime re-planning (AQE) pays for itself when stages move real
-    # data; on sub-second queries its per-stage re-optimization rounds
-    # are pure wall-clock overhead (paired A/B at sf0.1: q9 0.94 →
-    # 0.58 s, sessionize 0.56 → 0.31, running-sum 0.41 → 0.29). This
-    # mirrors the reference's fast-path/adaptive planner split
-    # (fast_path_router_planner.c skips planning work for cheap
-    # statements): small corpora execute the static plan; at real
-    # scale AQE's partition coalescing and skew-join splitting matter
-    # and stay on. Runtime-settable, so per-corpus switching is safe.
-    spark.conf.set(
-        "spark.sql.adaptive.enabled",
-        str(total >= _AQE_MIN_BYTES).lower(),
-    )
-
-    # Broadcast threshold sized to the corpus: broadcasting a side
-    # that is a large fraction of the corpus re-collects and re-ships
-    # it on every execution — at the 10× trend corpus (76 MiB), q3's
-    # 27 MiB orders broadcast WAS the scale cliff (interleaved
-    # min-of-5: 1657 ms → 1202 ms with the side shuffled instead, →
-    # 924 ms with shuffled-hash join). One-eighth of the corpus,
-    # floored at 8 MiB (every sf0.1 dim stays broadcast — all are
-    # <3 MiB) and capped at Spark-default-×6.4 64 MiB.
-    bcast = max(8 << 20, min(64 << 20, total // 8))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(bcast))
-
-    # Shuffled-hash join for sub-AQE corpora: SHJ skips the
-    # per-partition sorts SMJ needs on both sides (q3@10× above;
-    # no-op at sf0.1 where every join side broadcasts). Spark still
-    # stats-gates the hash build (canBuildLocalHashMap), and at
-    # ≥_AQE_MIN_BYTES the default SMJ preference returns — a 100 TB
-    # join's build side must spill, which SMJ handles.
-    spark.conf.set(
-        "spark.sql.join.preferSortMergeJoin",
-        str(total >= _AQE_MIN_BYTES).lower(),
-    )
-
-    # Reducer count sized to the corpus: every shuffle stage schedules
-    # this many tasks, and at fixture scale task scheduling IS the
-    # cost (paired A/B at sf0.1: 8 vs 16 reducers = q9 0.58 → 0.46 s,
-    # exact-dedup 0.23 → 0.14). One reducer per ~32 MiB of input,
-    # floor 8, ceiling 2× cores — the ceiling is what a real cluster
-    # runs with AQE coalescing downward from it.
-    shuffle_n = max(8, min(2 * par, total // (32 << 20)))
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_n))
-
-    # View registration is idempotent per (session, dir):
+    # View registration is idempotent per (session, corpus content):
     # re-registering the same ten views costs ~0.8 s per call (parquet
     # footer reads + plan-construction JVM round trips), which the
     # correctness gate pays 170× and the bench 3×/query without this
-    # guard.
-    if getattr(spark, "_citus_views_dir", None) == key:
+    # guard. Keyed by the fingerprint, so a table rewritten in place
+    # is re-registered.
+    if getattr(spark, "_citus_views_dir", None) == policy.fingerprint:
         return
 
     for t, path in paths.items():
@@ -188,7 +133,7 @@ def load_views(spark: SparkSession, sf_dir: str) -> None:
         # processes) and register the view over it: every query then
         # gets `par` native splits with no per-query exchange. At real
         # scale file count ≫ cores and the gate inside never fires.
-        read_path = _fanout_cache(spark, t, path, par) or path
+        read_path = _fanout_cache(spark, t, path, policy.par) or path
         df = spark.read.parquet(read_path)
         if t == "events":
             df = normalize_events_ts(df)
@@ -200,57 +145,30 @@ def load_views(spark: SparkSession, sf_dir: str) -> None:
             if dt == "timestamp_ntz":
                 df = df.withColumn(c, F.col(c).cast("timestamp"))
         df.createOrReplaceTempView(t)
-    spark._citus_views_dir = key
+    spark._citus_views_dir = policy.fingerprint
 
 
-# corpus size above which AQE's runtime re-planning is worth its
-# per-stage overhead (see load_views)
-_AQE_MIN_BYTES = 256 << 20
+def _table_paths(sf_dir: str) -> dict[str, str]:
+    paths = {t: os.path.join(sf_dir, f"{t}.parquet") for t in ALL_TABLES}
+    return {t: p for t, p in paths.items() if os.path.exists(p)}
 
 
-def corpus_bytes(sf_dir: str) -> int:
-    """Total on-disk bytes of the corpus under sf_dir (cached per dir —
-    fixture dirs are immutable driver artifacts)."""
-    key = os.path.abspath(sf_dir)
-    total = _CORPUS_BYTES.get(key)
-    if total is None:
-        total = sum(
-            _tree_bytes(os.path.join(sf_dir, f"{t}.parquet"))
-            for t in ALL_TABLES
-            if os.path.exists(os.path.join(sf_dir, f"{t}.parquet"))
-        )
-        _CORPUS_BYTES[key] = total
-    return total
+def scale_policy(spark: SparkSession, sf_dir: str) -> ScalePolicy:
+    """The ScalePolicy the last load_views(spark, sf_dir) applied, so
+    readers do not re-walk the corpus; a corpus this session never
+    loaded is walked (and not kept)."""
+    policy = getattr(spark, "_citus_policies", {}).get(os.path.abspath(sf_dir))
+    if policy is None:
+        par = spark.sparkContext.defaultParallelism or 8
+        policy = corpus_policy(sf_dir, _table_paths(sf_dir), par)
+    return policy
 
 
 def corpus_above_cutover(sf_dir: str) -> bool:
-    """True when the corpus is above the at-scale conf cutover
-    (_AQE_MIN_BYTES) — the same gate the conf layer uses. Entries
-    whose fixture-scale formulation is a full-table unpartitioned
-    window switch to their two-phase scale path above this line
-    (r10 verdict item #5), exactly like AQE/SMJ/broadcast caps
-    switch. load_views has always run first, so the per-dir byte
-    total is already cached."""
-    return corpus_bytes(sf_dir) >= _AQE_MIN_BYTES
-
-# per-dir corpus byte totals (fixture dirs are immutable), so the
-# every-call conf re-application above never re-walks the tree
-_CORPUS_BYTES: dict[str, int] = {}
-
-# Fan out only tables big enough that a SERIAL scan pass is the
-# stage's bottleneck, and size the width to the DATA, not the core
-# count. The r7 A/B that fanned every table 32-ways lost 0.05-0.2 s
-# per query (32 near-empty tasks per dim-table scan, paid again in
-# every broadcast build); the r8 re-measure fanning ONLY ≥4 MiB
-# tables at ~1 file/MiB won it back and more (headline total 6.2 →
-# 5.0-5.2 s: q1 0.41→0.32, q3 0.51→0.36, q9 0.67→0.54 — lineitem is
-# the only sf0.1 table above the floor). Dropping the floor to 2 MiB
-# (orders/events fan too) regressed to 6.3 s: a 2 MiB scan is already
-# cheaper than the extra tasks it would split into. A 100 MB+
-# single-file table (sf1 fixture, or any real single-file drop) fans
-# to the full core count via the same 1-file/MiB rule, capped at par.
-_FANOUT_MIN_BYTES = 4 << 20
-_FANOUT_FILE_BYTES = 1 << 20
+    """True when the corpus is above ScalePolicy.cutover, where
+    full-table windows and other fixture-scale formulations switch to
+    their scale paths (r10 verdict item #5), as AQE/SMJ do."""
+    return scale_policy(SparkSession.active(), sf_dir).above_cutover
 
 
 def _fanout_cache(spark: SparkSession, t: str, path: str, par: int) -> str | None:
@@ -267,15 +185,13 @@ def _fanout_cache(spark: SparkSession, t: str, path: str, par: int) -> str | Non
     import shutil
     import tempfile
 
-    size = _tree_bytes(path)
-    if size < _FANOUT_MIN_BYTES:
-        return None
-    # data-proportional width (see _FANOUT_FILE_BYTES note above);
-    # gate on the WIDTH, not the core count — a source already split
-    # at least this wide must pass through untouched (repartitioning
-    # 12 files down to 8 would pay the build to LOSE scan splits)
-    par = min(par, max(4, size // _FANOUT_FILE_BYTES))
-    if _leaf_file_count(path) >= par:
+    size, _mtime, files = tree_stat(path)
+    # data-proportional width (scale.fanout_width); gate on the WIDTH,
+    # not the core count — a source already split at least this wide
+    # must pass through untouched (repartitioning 12 files down to 8
+    # would pay the build to LOSE scan splits)
+    par = fanout_width(size, par)
+    if par is None or files >= par:
         return None
     sig = hashlib.sha1(
         f"{os.path.abspath(path)}|{size}|{int(os.path.getmtime(path))}|{par}"
@@ -310,24 +226,6 @@ def _fanout_cache(spark: SparkSession, t: str, path: str, par: int) -> str | Non
     return tmp
 
 
-def _leaf_file_count(path: str) -> int:
-    if os.path.isfile(path):
-        return 1
-    n = 0
-    for _root, _dirs, files in os.walk(path):
-        n += sum(1 for f in files if f.endswith(".parquet"))
-    return n or 1
-
-
-def _tree_bytes(path: str) -> int:
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    return total
-
-
 def _ship_package(spark: SparkSession) -> None:
     """Make `citus_spark` importable on Spark's Python workers.
 
@@ -356,11 +254,32 @@ def _write_pkg_zip(pkg_dir: str) -> str:
     different tree gets a different file, an identical tree re-lands
     the same bytes, and the write-then-atomic-rename never exposes a
     half-written zip to a concurrent reader."""
+    import glob
     import hashlib
+    import stat
     import tempfile
+    import time
     import zipfile
 
-    zdir = tempfile.gettempdir()
+    def sha256(path: str) -> str:
+        with open(path, "rb") as fh:
+            return hashlib.sha256(fh.read()).hexdigest()
+
+    # The zip runs on the driver and every executor, and on a shared
+    # sticky-bit /tmp anyone can precompute a content-addressed name
+    # and plant a file under it: so it lives in a 0700 directory of
+    # this user's, and an existing zip is reused only when its full
+    # sha256 matches the one just built.
+    uid = os.getuid()
+    zdir = os.path.join(tempfile.gettempdir(), f"citus_spark_pkg-{uid}")
+    os.makedirs(zdir, mode=0o700, exist_ok=True)
+    st = os.lstat(zdir)
+    if not stat.S_ISDIR(st.st_mode) or st.st_uid != uid or (
+        stat.S_IMODE(st.st_mode) != 0o700
+    ):
+        # someone else holds the name (or opened it up): use a fresh
+        # private directory for this process
+        zdir = tempfile.mkdtemp(prefix=f"citus_spark_pkg-{uid}-")
     fd, tmp = tempfile.mkstemp(dir=zdir, suffix=".zip")
     os.close(fd)
     try:
@@ -376,16 +295,19 @@ def _write_pkg_zip(pkg_dir: str) -> str:
                             full, os.path.dirname(pkg_dir)
                         )
                         z.write(full, rel)
-        with open(tmp, "rb") as fh:
-            digest = hashlib.sha256(fh.read()).hexdigest()[:12]
-        zpath = os.path.join(zdir, f"citus_spark_pkg_{digest}.zip")
-        # world-readable: executors (and other users' sessions that
-        # land on the same digest) must be able to fetch it
+        digest = sha256(tmp)
+        zpath = os.path.join(zdir, f"citus_spark_pkg_{digest[:12]}.zip")
+        # the mode shipped zips have always had (mkstemp makes 0600);
+        # the 0700 directory is what keeps other users out
         os.chmod(tmp, 0o644)
-        if os.path.exists(zpath):
-            # same digest ⇒ same bytes — nothing to do, and on a
-            # sticky-bit /tmp replacing ANOTHER USER's file would
-            # raise EPERM
+        try:
+            reuse = sha256(zpath) == digest
+            if reuse:
+                # in use again: keep it clear of the 7-day aging below
+                os.utime(zpath)
+        except OSError:  # absent, or aged away meanwhile
+            reuse = False
+        if reuse:
             os.unlink(tmp)
         else:
             os.replace(tmp, zpath)
@@ -398,9 +320,6 @@ def _write_pkg_zip(pkg_dir: str) -> str:
     # best-effort aging of stale digests from old trees (never the one
     # just landed — deleting by name-mismatch alone would break a
     # concurrent live session still fetching its own digest)
-    import glob
-    import time
-
     cutoff = time.time() - 7 * 86400
     for old in glob.glob(os.path.join(zdir, "citus_spark_pkg_*.zip")):
         try:
@@ -411,38 +330,24 @@ def _write_pkg_zip(pkg_dir: str) -> str:
     return zpath
 
 
-def _serial_final_jsession(spark: SparkSession):
+def _serial_final_jsession(spark: SparkSession, policy: ScalePolicy):
     """JVM-side clone of the session pinned to ONE shuffle partition,
     for the two-stage terminal-sort plan (see single_partition_sort).
 
-    cloneSession() copies the parent's session state (conf, at clone
-    time); the clone then diverges only in the four confs re-asserted
-    on EVERY call below (two pinned: shuffle partitions 1 / AQE off;
-    two copied from the parent's per-corpus derivation: parquet split
-    size / broadcast threshold). All sub-cutover corpora share identical
-    values for every other execution-relevant conf (AQE off, SHJ
-    preference, 16 MiB parquet splits at ≥8 cores), so re-asserting is
-    idempotent and a DataFrame planned under the clone can never see a
+    cloneSession() copies the parent's session state at clone time; on
+    EVERY call the clone is re-set to the corpus's policy confs (the
+    caller runs only below the cutover, so AQE is off) with one shuffle
+    partition, so a DataFrame planned under the clone can never see a
     conf flip between construction and execution — the property the
-    parent session cannot give (its confs are re-derived per corpus on
+    parent session cannot give (its confs are re-applied per corpus on
     every load_views call)."""
     j = getattr(spark, "_citus_serial_jsession", None)
     if j is None:
         j = spark._jsparkSession.cloneSession()
         spark._citus_serial_jsession = j
     conf = j.conf()
-    # the one per-corpus conf that matters for join-free agg plans:
-    # scan split size (parallelism of the partial-agg stage)
-    conf.set(
-        "spark.sql.files.maxPartitionBytes",
-        spark.conf.get("spark.sql.files.maxPartitionBytes"),
-    )
-    conf.set(
-        "spark.sql.autoBroadcastJoinThreshold",
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold"),
-    )
-    conf.set("spark.sql.shuffle.partitions", "1")
-    conf.set("spark.sql.adaptive.enabled", "false")
+    for k, v in {**policy.confs(), "spark.sql.shuffle.partitions": "1"}.items():
+        conf.set(k, v)
     return j
 
 
@@ -486,63 +391,46 @@ def _joins_broadcast_safe(node, thresh: int) -> bool:
 
 
 # The two-stage serial-final plan has its own, TIGHTER gate below the
-# AQE cutover: its 1-task final stage costs O(G log G) in the GROUP
-# cardinality G. Measured at sf0.1 (17 MiB, ~15 k groups) the fold
-# wins −4..−33 % per query; at native sf1 (186 MiB, ~150 k groups) it
-# LOSES big on the high-cardinality aggregates (having_filter
-# 0.47 → 2.44 s, topn 0.38 → 1.21 s — the serial merge+sort dwarfs
-# the saved stage). The gate is therefore CARDINALITY-aware (r11
-# verdict item #5): when every grouping key provably traces to a base
-# parquet column, G is bounded by the product of per-column NDVs
-# (approx_count_distinct, computed once per corpus dir at first need —
-# the engine's ANALYZE) and the fold is taken iff that bound stays
-# under _SERIAL_FINAL_MAX_GROUPS, anywhere below the 256 MiB cutover.
-# When the bound is unknowable (expression keys, derived columns) the
-# corpus-byte proxy keeps the measured r11 behavior: ≤2× the
-# measured-win corpus folds, the 32 MiB–256 MiB band keeps the r10
-# single-partition sort (near-flat sf0.1→sf1 walls: having 1.53×,
-# topn 1.12× for 10× rows).
-_SERIAL_FINAL_MAX_BYTES = 32 << 20
-# Group-cardinality ceiling for the fold: ~2× the largest measured-win
-# G (having_filter ≈ 15 k groups at sf0.1), an order of magnitude
-# under the measured-loss G (≈ 150 k at sf1). NDV products are upper
-# bounds (filters/joins can only drop key values), so a pass here is
-# conservative in the safe direction.
-_SERIAL_FINAL_MAX_GROUPS = 32768
-
-# (corpus dir, column name) -> max approx NDV across tables carrying
-# that column, or None when no table does. Fixture dirs are immutable
-# driver artifacts, so per-process caching is sound; nothing is
-# persisted across processes.
-_NDV_CACHE: dict[tuple[str, str], int | None] = {}
+# cutover: its 1-task final stage costs O(G log G) in the GROUP
+# cardinality G (measurements at ScalePolicy.small). The gate is
+# therefore CARDINALITY-aware (r11 verdict item #5): when every
+# grouping key provably traces to a base parquet column, G is bounded
+# by the product of per-column NDVs (approx_count_distinct, computed
+# once per corpus at first need — the engine's ANALYZE) and the fold
+# is taken iff that bound stays under ScalePolicy.fold_max_groups,
+# anywhere below the cutover. When the bound is unknowable (expression
+# keys, derived columns) the corpus-byte proxy keeps the measured r11
+# behavior: a corpus under ScalePolicy.small folds, larger ones keep
+# the r10 single-partition sort.
 
 
-def _column_ndv(spark: SparkSession, sf_dir: str, col: str) -> int | None:
+def _column_ndv(spark: SparkSession, policy: ScalePolicy,
+                col: str) -> int | None:
     """Max approx_count_distinct of `col` across every registered base
     table that carries it (an upper bound on the column's NDV wherever
-    its values flow). One tiny aggregate job per (corpus, column),
-    cached for the process — this runs at DataFrame-BUILD time, the
-    same place Catalyst planning happens, never inside the bench's
-    timed drain."""
-    key = (os.path.abspath(sf_dir), col)
-    if key in _NDV_CACHE:
-        return _NDV_CACHE[key]
+    its values flow), or None when no table does. One tiny aggregate
+    job per (corpus, column), memoized on the corpus's policy — this
+    runs at DataFrame-BUILD time, the same place Catalyst planning
+    happens, never inside the bench's timed drain."""
     from pyspark.sql import functions as F
 
-    ndv = None
-    for t in ALL_TABLES:
-        try:
-            tdf = spark.table(t)
-        except Exception:
-            continue
-        if col in tdf.columns:
-            n = tdf.agg(F.approx_count_distinct(col)).collect()[0][0]
-            ndv = max(ndv or 0, int(n))
-    _NDV_CACHE[key] = ndv
-    return ndv
+    def probe() -> int | None:
+        ndv = None
+        for t in ALL_TABLES:
+            try:
+                tdf = spark.table(t)
+            except Exception:
+                continue
+            if col in tdf.columns:
+                n = tdf.agg(F.approx_count_distinct(col)).collect()[0][0]
+                ndv = max(ndv or 0, int(n))
+        return ndv
+
+    return policy.memo(("ndv", col), probe)
 
 
-def _estimated_groups(spark: SparkSession, agg, sf_dir: str) -> int | None:
+def _estimated_groups(spark: SparkSession, agg,
+                      policy: ScalePolicy) -> int | None:
     """Upper bound on the terminal aggregate's group cardinality, or
     None when it cannot be bounded. Sound only for grouping keys that
     are direct base-column references: each key must be an
@@ -576,34 +464,17 @@ def _estimated_groups(spark: SparkSession, agg, sf_dir: str) -> int | None:
             return None
         if (g.name(), g.exprId().id()) not in leaf_ids:
             return None
-        ndv = _column_ndv(spark, sf_dir, g.name())
+        ndv = _column_ndv(spark, policy, g.name())
         if ndv is None:
             return None
         prod *= max(1, ndv)
     return prod
 
 
-def _serial_final_fold_ok(spark: SparkSession, agg, sf_dir: str,
-                          total: int) -> bool:
-    """Cardinality-aware fold gate: a provable G bound decides
-    directly (≤ _SERIAL_FINAL_MAX_GROUPS folds even in the
-    32 MiB–256 MiB band; above it never folds, even on a tiny corpus —
-    the byte-only r11 gate would have taken a 20 MiB / 10 M-group
-    fold); an unknowable G falls back to the measured corpus-byte
-    proxy."""
-    g = _estimated_groups(spark, agg, sf_dir)
-    if g is not None:
-        return g <= _SERIAL_FINAL_MAX_GROUPS
-    return total < _SERIAL_FINAL_MAX_BYTES
-
 # Narrow (partitioning-preserving) logical nodes the two-stage rewrite
 # may walk through between the terminal Sort and the Aggregate whose
 # exchange will establish the single partition.
 _NARROW_TOPS = ("Project", "Filter", "Window", "SubqueryAlias")
-# Kill-switch for the window-chain exchange collapse (A/B hook; the
-# rewrite inserts a no-shuffle Repartition(1) above the aggregate when
-# a Window sits in the narrow chain — see single_partition_sort).
-_COLLAPSE_WINDOW_CHAIN = True
 # Terminal nodes that plan as a partial/final physical pair around one
 # hash exchange (map-side combine BEFORE the wire — Distinct plans as
 # a grouping-only HashAggregate pair).
@@ -678,15 +549,15 @@ def single_partition_sort(spark: SparkSession, df: DataFrame,
     is small, Exchange SinglePartition + one local sort task — no
     sampling pass, no range exchange, identical total order.
 
-    Scale gates: the two-stage plan's serial final stage costs
-    O(G log G) in the group cardinality, so it is gated on G directly
-    when G is provable (NDV-product bound ≤ _SERIAL_FINAL_MAX_GROUPS,
-    see _serial_final_fold_ok) and on the corpus-byte proxy
-    (_SERIAL_FINAL_MAX_BYTES) otherwise (measured: wins at 17 MiB,
-    loses at 186 MiB on 100 k-group aggregates). Both rewrites
-    disable at ≥_AQE_MIN_BYTES — the same
-    corpus-size cutover as AQE/broadcast/reducer sizing (load_views) —
-    and the stock range-partitioned sort returns, which is the
+    Scale gates (fields of the corpus's ScalePolicy): the two-stage
+    plan's serial final stage costs O(G log G) in the group
+    cardinality, so it is gated on G directly when G is provable
+    (NDV-product bound ≤ fold_max_groups, see ScalePolicy.fold_ok)
+    and on the corpus-byte proxy (`small`) otherwise (measured: wins
+    at 17 MiB, loses at 186 MiB on 100 k-group aggregates). Both
+    rewrites disable at the `cutover` — the same line as
+    AQE/broadcast/reducer sizing (load_views) — and the stock
+    range-partitioned sort returns, which is the
     correct plan when the output itself can be large. This mirrors
     the reference's fast-path planner split
     (fast_path_router_planner.c: cheap statements skip the general
@@ -697,8 +568,8 @@ def single_partition_sort(spark: SparkSession, df: DataFrame,
     TakeOrderedAndProject already and never reach here. Any internal
     API drift falls back to the original DataFrame.
     """
-    total = _CORPUS_BYTES.get(os.path.abspath(sf_dir), 1 << 62)
-    if total >= _AQE_MIN_BYTES:
+    policy = scale_policy(spark, sf_dir)
+    if policy.above_cutover:
         return df
     try:
         jvm = spark._jvm
@@ -753,105 +624,87 @@ def single_partition_sort(spark: SparkSession, df: DataFrame,
         # optimizer work: a persisted hash-partitioned intermediate
         # would otherwise satisfy the aggregate's distribution with
         # >1 partitions and break the total order.
-        if total < _AQE_MIN_BYTES:  # fold gate proper is per-query below
-            try:
-                chain = []
-                node = sort.child()
-                while node.getClass().getSimpleName() in _NARROW_TOPS:
-                    chain.append(node)
-                    node = node.child()
-                if node.getClass().getSimpleName() in _AGG_TOPS:
-                    # Guard scope = everything BELOW the aggregate —
-                    # the subtree whose partitioning/row-movement could
-                    # break the two-stage plan — plus every CTE
-                    # definition (a def may be inlined anywhere below).
-                    # The narrow chain ABOVE the aggregate is excluded:
-                    # it runs inside the 1-task final stage regardless,
-                    # so a chain Window must not trip the token reject
-                    # (r11 review finding #2 — under WithCTE the old
-                    # scan covered the whole wrapper and knocked CTE
-                    # queries with chain Windows back to the 2-exchange
-                    # r10 form that the identical non-CTE query avoids).
-                    scopes = [node.child()]
-                    if wrapper is not None:
-                        kids = wrapper.children()
-                        scopes += [
-                            kids.apply(i) for i in range(kids.size() - 1)
-                        ]
-                    below = "".join(s.treeString() for s in scopes)
-                    bcast = int(
-                        spark.conf.get(
-                            "spark.sql.autoBroadcastJoinThreshold"
-                        )
+        try:
+            chain = []
+            node = sort.child()
+            while node.getClass().getSimpleName() in _NARROW_TOPS:
+                chain.append(node)
+                node = node.child()
+            if node.getClass().getSimpleName() in _AGG_TOPS:
+                # Guard scope = everything BELOW the aggregate —
+                # the subtree whose partitioning/row-movement could
+                # break the two-stage plan — plus every CTE
+                # definition (a def may be inlined anywhere below).
+                # The narrow chain ABOVE the aggregate is excluded:
+                # it runs inside the 1-task final stage regardless,
+                # so a chain Window must not trip the token reject
+                # (r11 review finding #2 — under WithCTE the old
+                # scan covered the whole wrapper and knocked CTE
+                # queries with chain Windows back to the 2-exchange
+                # r10 form that the identical non-CTE query avoids).
+                scopes = [node.child()]
+                if wrapper is not None:
+                    kids = wrapper.children()
+                    scopes += [kids.apply(i) for i in range(kids.size() - 1)]
+                below = "".join(s.treeString() for s in scopes)
+                if not any(
+                    tok in below
+                    for tok in (
+                        "Window", "Repartition", "Rebalance",
+                        "spark_catalog", "LogicalRDD",
                     )
-                    if not any(
-                        tok in below
-                        for tok in (
-                            "Window", "Repartition", "Rebalance",
-                            "spark_catalog", "LogicalRDD",
-                        )
-                    ) and (
-                        "Join" not in below
-                        or all(
-                            _joins_broadcast_safe(s, bcast)
-                            for s in scopes
-                        )
-                    ) and "InMemoryRelation" not in (
-                        df._jdf.queryExecution().withCachedData()
-                        .treeString()
-                    ) and _serial_final_fold_ok(
-                        # cardinality gate LAST: it may run one tiny
-                        # NDV job per new grouping column, which the
-                        # cheap token guards above should pre-empt for
-                        # ineligible shapes
-                        spark, node, sf_dir, total
-                    ):
-                        # A Window in the narrow chain whose partition
-                        # keys do NOT cover the group keys demands a
-                        # ClusteredDistribution that the aggregate's
-                        # HashPartitioning(groupKeys, 1) cannot
-                        # satisfy — EnsureRequirements inserts a
-                        # useless 1→1 exchange (a whole extra stage)
-                        # to re-cluster one partition onto itself. A
-                        # no-shuffle Repartition(1) above the
-                        # aggregate reports SinglePartition, which
-                        # satisfies EVERY distribution, so the window
-                        # (and everything up to the terminal local
-                        # sort) fuses into the aggregate's final
-                        # stage. Physically a no-op: the clone pins
-                        # shuffle.partitions=1, so the coalesce maps
-                        # one partition onto itself. Only inserted
-                        # when some chain Window's distribution is
-                        # actually unsatisfied (windowKeys ⊉
-                        # groupKeys and non-empty — see
-                        # _window_chain_needs_coalesce); otherwise it
-                        # would split the final-agg/sort codegen span
-                        # for no exchange saved.
-                        new_child = sort.child()
-                        if _COLLAPSE_WINDOW_CHAIN and (
-                            _window_chain_needs_coalesce(chain, node)
-                        ):
-                            rebuilt = logical.Repartition(
-                                1, False, node
-                            )
-                            to_seq = (
-                                spark.sparkContext._jvm.PythonUtils
-                                .toSeq
-                            )
-                            for c in reversed(chain):
-                                rebuilt = c.withNewChildren(
-                                    to_seq([rebuilt])
-                                )
-                            new_child = rebuilt
-                        return build(
-                            _serial_final_jsession(spark),
-                            logical.Sort(
-                                sort.order(), False, new_child,
-                                jvm.scala.Option.empty(),
-                            ),
-                        )
-            except Exception:
-                pass  # fall through to the single-partition-sort form
+                ) and (
+                    "Join" not in below
+                    or all(
+                        _joins_broadcast_safe(s, policy.broadcast_bytes)
+                        for s in scopes
+                    )
+                ) and "InMemoryRelation" not in (
+                    df._jdf.queryExecution().withCachedData().treeString()
+                ) and policy.fold_ok(
+                    # cardinality gate LAST: it may run one tiny
+                    # NDV job per new grouping column, which the
+                    # cheap token guards above should pre-empt for
+                    # ineligible shapes
+                    _estimated_groups(spark, node, policy)
+                ):
+                    # A Window in the narrow chain whose partition
+                    # keys do NOT cover the group keys demands a
+                    # ClusteredDistribution that the aggregate's
+                    # HashPartitioning(groupKeys, 1) cannot
+                    # satisfy — EnsureRequirements inserts a
+                    # useless 1→1 exchange (a whole extra stage)
+                    # to re-cluster one partition onto itself. A
+                    # no-shuffle Repartition(1) above the
+                    # aggregate reports SinglePartition, which
+                    # satisfies EVERY distribution, so the window
+                    # (and everything up to the terminal local
+                    # sort) fuses into the aggregate's final
+                    # stage. Physically a no-op: the clone pins
+                    # shuffle.partitions=1, so the coalesce maps
+                    # one partition onto itself. Only inserted
+                    # when some chain Window's distribution is
+                    # actually unsatisfied (windowKeys ⊉
+                    # groupKeys and non-empty — see
+                    # _window_chain_needs_coalesce); otherwise it
+                    # would split the final-agg/sort codegen span
+                    # for no exchange saved.
+                    new_child = sort.child()
+                    if _window_chain_needs_coalesce(chain, node):
+                        rebuilt = logical.Repartition(1, False, node)
+                        to_seq = spark.sparkContext._jvm.PythonUtils.toSeq
+                        for c in reversed(chain):
+                            rebuilt = c.withNewChildren(to_seq([rebuilt]))
+                        new_child = rebuilt
+                    return build(
+                        _serial_final_jsession(spark, policy),
+                        logical.Sort(
+                            sort.order(), False, new_child,
+                            jvm.scala.Option.empty(),
+                        ),
+                    )
+        except Exception:
+            pass  # fall through to the single-partition-sort form
 
         # -- single-partition terminal sort (r10 form) --------------------
         rep = logical.Repartition(1, True, sort.child())

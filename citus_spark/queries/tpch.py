@@ -27,18 +27,6 @@ regress suite by ordering on unique keys).
 
 from citus_spark.queries import DAVG, DSUM, register_shared_sql, register_split
 
-# Corpus-byte gate for the q3/q10 broadcast-side reassociation below:
-# the hinted customer⋈orders broadcast grows linearly with the corpus
-# (unlike the dimension broadcasts the conf-derived threshold governs),
-# so the hint must not outlive the scale where a driver-side build of
-# that relation is trivially cheap. 32 MiB ≈ 2× the measured-win corpus
-# (sf0.1, 17 MiB — ~73 k build rows for q3, ~5.4 k for q10); the 10×
-# trend corpus (native sf1, 186 MiB) and everything above keep the
-# original text, where the conf layer's corpus-proportional broadcast
-# threshold (and ≥256 MiB, AQE + SMJ) makes the call. Same gating
-# philosophy and scale band as _SERIAL_FINAL_MAX_BYTES.
-_BCAST_RESTRUCTURE_MAX_BYTES = 32 << 20
-
 # ---------------------------------------------------------------------------
 # Derived partsupp: the driver fixture set has no partsupp.parquet
 # (reference loads it in multi_create_table.sql from data/partsupp.*),
@@ -177,7 +165,8 @@ ORDER BY l_returnflag, l_linestatus
 # customer is a reference table (broadcast); orders⋈lineitem is the
 # co-located dist-key join (LOCAL_PARTITION_JOIN, multi_join_order.h:34).
 #
-# Below _BCAST_RESTRUCTURE_MAX_BYTES the Spark side reorders the join
+# Below the small-corpus band (ScalePolicy.small — where the gate and
+# its measured reasons live) the Spark side reorders the join
 # (guide §3.1 "pick the strategy deliberately"): the stock left-deep
 # plan broadcasts the FILTERED LINEITEM (~270 k pruned rows at sf0.1 —
 # the single most expensive driver-side hashed-relation build of the
@@ -224,10 +213,10 @@ LIMIT 10
 
 
 def _tpch_q3(spark, sf_dir):
-    from citus_spark.queries import corpus_bytes, load_views
+    from citus_spark.queries import load_views, scale_policy
 
     load_views(spark, sf_dir)
-    small = corpus_bytes(sf_dir) < _BCAST_RESTRUCTURE_MAX_BYTES
+    small = scale_policy(spark, sf_dir).small_corpus
     return spark.sql(_Q3_SMALL_SQL if small else _Q3_SQL)
 
 
@@ -334,10 +323,10 @@ LIMIT 20
 
 
 def _tpch_q10(spark, sf_dir):
-    from citus_spark.queries import corpus_bytes, load_views
+    from citus_spark.queries import load_views, scale_policy
 
     load_views(spark, sf_dir)
-    small = corpus_bytes(sf_dir) < _BCAST_RESTRUCTURE_MAX_BYTES
+    small = scale_policy(spark, sf_dir).small_corpus
     return spark.sql(_Q10_SMALL_SQL if small else _Q10_SQL)
 
 
@@ -498,24 +487,22 @@ ORDER BY nation, o_year DESC
 # steady-state (plans/r12/tpch_q9_{before,after}_sf3.txt).
 #
 # The supplier count `s` is inlined as a LITERAL, computed once per
-# corpus dir at DataFrame-BUILD time and cached in-process (exactly
-# like the serial-final NDV gate: catalog-statistics work, never
-# inside the bench's timed drain, never persisted across processes).
+# corpus content at DataFrame-BUILD time and memoized on the corpus's
+# ScalePolicy (exactly like the serial-final NDV gate:
+# catalog-statistics work, never inside the bench's timed drain, never
+# persisted across processes; a rewritten supplier table is a new
+# fingerprint and so a fresh count).
 # A scalar-subquery spelling was measured first and REJECTED: a
 # ScalarSubquery inside the per-row IN predicate de-vectorizes the
 # filter (18 M-row filter at sf3: 0.32 s literal vs 8.7–18.7 s
 # subquery form). The oracle recomputes s independently inside its
 # own CTE, so the literal is hash-checked, not trusted.
-_SUPPLIER_COUNT_CACHE: dict[str, int] = {}
-
-
 def _supplier_count(spark, sf_dir: str) -> int:
-    import os
+    from citus_spark.queries import scale_policy
 
-    key = os.path.abspath(sf_dir)
-    if key not in _SUPPLIER_COUNT_CACHE:
-        _SUPPLIER_COUNT_CACHE[key] = spark.table("supplier").count()
-    return _SUPPLIER_COUNT_CACHE[key]
+    return scale_policy(spark, sf_dir).memo(
+        "supplier_count", lambda: spark.table("supplier").count()
+    )
 
 
 def _q9_spark_sql(s: int) -> str:

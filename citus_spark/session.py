@@ -22,6 +22,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from citus_spark.scale import ScalePolicy
 from citus_spark.session_mgmt import MgmtSurfaceMixin
 from citus_spark.session_writes import WriteFunnelMixin
 from citus_spark.catalog import (
@@ -123,15 +124,12 @@ def get_spark(app_name: str = "citus_spark", cpus: int | None = None) -> SparkSe
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.autoBroadcastJoinThreshold", str(ScalePolicy.bcast_cap))
         # split even small parquet files across tasks so single-file
-        # test tables still scan in parallel, but not below 16 MiB:
-        # finer splits manufacture tasks whose scheduling overhead
-        # dominates sub-second queries (measured −20-30% on the
-        # floor-bound headline set vs 4 MiB). queries.load_views
-        # re-derives this per corpus (16 MiB floor ↔ 128 MiB default
-        # ceiling for at-scale inputs where files outnumber cores).
-        .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
+        # test tables still scan in parallel, but not below the split
+        # floor (ScalePolicy.split_floor has the measurement);
+        # queries.load_views re-derives both confs per corpus
+        .config("spark.sql.files.maxPartitionBytes", str(ScalePolicy.split_floor))
         # Kryo for the JVM-side closure/broadcast serializer is
         # scale-neutral (it wins on both topologies); the local-only
         # compression posture lives in session_confs, gated on master.

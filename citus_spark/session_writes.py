@@ -16,6 +16,8 @@ import tempfile
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from citus_spark.scale import tree_stat
+
 
 class WriteFunnelMixin:
     """Write-path methods mixed into DistributedSession. `self` is
@@ -548,13 +550,7 @@ class WriteFunnelMixin:
                 f"relation size: {name!r} is not a Citus table with "
                 "materialized storage"
             )
-        root = self._live_path(entry)
-        if os.path.isfile(root):
-            return os.path.getsize(root)
-        total = 0
-        for r, _d, files in os.walk(root):
-            total += sum(os.path.getsize(os.path.join(r, f)) for f in files)
-        return total
+        return tree_stat(self._live_path(entry))[0]
 
     # -- live-storage helpers: every writing statement resolves the
     # relation through these, so a time-partitioned table's DML/COPY/

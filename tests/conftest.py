@@ -1,9 +1,11 @@
+import contextlib
+import dataclasses
 import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
@@ -34,6 +36,32 @@ def pytest_collection_modifyitems(config, items):
     if drop:
         config.hook.pytest_deselected(items=drop)
         items[:] = keep
+
+
+@contextlib.contextmanager
+def forced_policy(spark, sf_dir, total=None, ndv=None):
+    """Run the body as if sf_dir's corpus were `total` bytes on disk
+    (default: its real size), which puts it on the other side of a
+    scale gate, with each column NDV in `ndv` already in the
+    statistics memo. The corpus's ScalePolicy is swapped for
+    dataclasses.replace(policy, total=total) (with a fresh memo) and
+    its confs are applied; the real policy and its confs come back
+    afterwards."""
+    from citus_spark import scale
+    from citus_spark.queries import load_views, scale_policy
+
+    load_views(spark, sf_dir)
+    real = scale_policy(spark, sf_dir)
+    forced = dataclasses.replace(real, total=total or real.total)
+    for col, n in (ndv or {}).items():
+        forced.memo(("ndv", col), lambda n=n: n)
+    scale._POLICIES[real.fingerprint] = forced
+    try:
+        load_views(spark, sf_dir)
+        yield forced
+    finally:
+        scale._POLICIES[real.fingerprint] = real
+        load_views(spark, sf_dir)
 
 
 @pytest.fixture(scope="session")

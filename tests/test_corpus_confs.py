@@ -11,17 +11,27 @@ import pytest
 from tests.conftest import SF_MED, SF_SMALL
 
 
-def _expected_confs(spark, sf_dir):
-    from citus_spark.queries import _AQE_MIN_BYTES, _CORPUS_BYTES, load_views
+def _on_disk_bytes(sf_dir):
+    from citus_spark.queries import ALL_TABLES
 
-    load_views(spark, sf_dir)
-    total = _CORPUS_BYTES[os.path.abspath(sf_dir)]
+    total = 0
+    for t in ALL_TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.isfile(path):
+            total += os.path.getsize(path)
+        for root, _dirs, files in os.walk(path):
+            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
+    return total
+
+
+def _expected_confs(spark, sf_dir):
+    total = _on_disk_bytes(sf_dir)
     par = spark.sparkContext.defaultParallelism or 8
     return {
         "spark.sql.files.maxPartitionBytes": str(
             max(16 << 20, min(128 << 20, total // (2 * par) or 1))
         ),
-        "spark.sql.adaptive.enabled": str(total >= _AQE_MIN_BYTES).lower(),
+        "spark.sql.adaptive.enabled": str(total >= 256 << 20).lower(),
         "spark.sql.shuffle.partitions": str(
             max(8, min(2 * par, total // (32 << 20)))
         ),
@@ -29,7 +39,7 @@ def _expected_confs(spark, sf_dir):
             max(8 << 20, min(64 << 20, total // 8))
         ),
         "spark.sql.join.preferSortMergeJoin": str(
-            total >= _AQE_MIN_BYTES
+            total >= 256 << 20
         ).lower(),
     }
 
@@ -72,13 +82,14 @@ def test_confs_follow_the_corpus_across_alternation(spark):
 
 def test_conf_reapplication_skips_the_expensive_path(spark):
     """The every-call conf re-application must NOT re-register views
-    or re-walk the fixture tree (that is the 0.8 s/call cost the
-    idempotent guard exists to avoid)."""
+    (that is the 0.8 s/call cost the idempotent guard exists to
+    avoid): each call walks the corpus once, one stat per table file,
+    to fingerprint it, and then only sets confs."""
     import time
 
     from citus_spark.queries import load_views
 
-    load_views(spark, SF_SMALL)  # prime both caches
+    load_views(spark, SF_SMALL)  # register the views
     t0 = time.time()
     for _ in range(20):
         load_views(spark, SF_SMALL)

@@ -244,7 +244,7 @@ def test_fanout_gate_respects_existing_width(monkeypatch):
     repartitioned DOWN (review fix)."""
     import citus_spark.queries as q
 
-    monkeypatch.setattr(q, "_tree_bytes", lambda p: 8 << 20)
-    monkeypatch.setattr(q, "_leaf_file_count", lambda p: 12)
+    # 8 MiB in 12 parquet files
+    monkeypatch.setattr(q, "tree_stat", lambda p: (8 << 20, 0, 12))
     # width = min(32, max(4, 8 MiB // 1 MiB)) = 8; 12 existing >= 8
     assert q._fanout_cache(None, "t", "/nonexistent", 32) is None

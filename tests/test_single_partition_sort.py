@@ -2,9 +2,11 @@
 verdict item #1): plan shape, ordering preservation, LIMIT/no-sort
 no-ops, and the corpus-size scale gate."""
 
-import os
+import re
 
 import citus_spark.queries as q
+from citus_spark.scale import ScalePolicy
+from tests.conftest import forced_policy
 
 
 SF = "/root/testdata/sf0.001"
@@ -12,6 +14,19 @@ SF = "/root/testdata/sf0.001"
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _hash_exchange_partitions(plan: str) -> list[int]:
+    """numPartitions of every hash-shuffle Exchange node in the plan
+    (the last argument of hashpartitioning(...), whatever the key
+    expressions or the text after the closing paren)."""
+    return [
+        int(n)
+        for n in re.findall(
+            r"\bExchange hashpartitioning\((?:[^()]|\([^()]*\))*?,\s*(\d+)\)",
+            plan,
+        )
+    ]
 
 
 def test_terminal_sort_agg_two_stage_plan(spark):
@@ -23,7 +38,7 @@ def test_terminal_sort_agg_two_stage_plan(spark):
     plan = _plan(df)
     assert "Exchange SinglePartition" not in plan
     assert "rangepartitioning" not in plan
-    assert ", 1)," in plan.split("Exchange hashpartitioning", 1)[1][:200]
+    assert _hash_exchange_partitions(plan) == [1]
     assert plan.count("Exchange") == 1
     # local (non-global) sort: printed as "Sort [...], false, 0"
     assert "], false, 0" in plan
@@ -133,7 +148,9 @@ def test_with_cte_top_sort_rewritten(spark):
     plan = _plan(df)
     assert "rangepartitioning" not in plan
     assert "Exchange SinglePartition" not in plan
-    assert ", 1), ENSURE_REQUIREMENTS" in plan  # agg exchange → 1 part
+    # the aggregate's exchange is the plan's only hash shuffle and
+    # lands in one partition
+    assert _hash_exchange_partitions(plan) == [1]
     rows = [tuple(r) for r in df.collect()]
     keys = [(r[0], -r[1]) for r in rows]  # nation ASC, o_year DESC
     assert keys == sorted(keys)
@@ -144,12 +161,8 @@ def test_mid_corpus_low_cardinality_takes_fold(spark):
     # cardinality-aware gate (r11 verdict item #5) keeps the two-stage
     # fold that the byte-only gate used to forfeit. having_filter
     # groups by o_custkey (NDV ≈ 150 at sf0.001, far under
-    # _SERIAL_FINAL_MAX_GROUPS).
-    key = os.path.abspath(SF)
-    q.load_views(spark, SF)
-    saved = q._CORPUS_BYTES.get(key)
-    try:
-        q._CORPUS_BYTES[key] = q._SERIAL_FINAL_MAX_BYTES
+    # ScalePolicy.fold_max_groups).
+    with forced_policy(spark, SF, total=ScalePolicy.small):
         df = q.single_partition_sort(
             spark, spark.sql(q.ORACLES["having_filter"]), SF
         )
@@ -157,9 +170,6 @@ def test_mid_corpus_low_cardinality_takes_fold(spark):
         assert "Exchange SinglePartition" not in plan
         assert "rangepartitioning" not in plan
         assert plan.count("Exchange") == 1
-    finally:
-        if saved is not None:
-            q._CORPUS_BYTES[key] = saved
 
 
 def test_mid_corpus_unknown_cardinality_keeps_single_partition_sort(spark):
@@ -167,11 +177,7 @@ def test_mid_corpus_unknown_cardinality_keeps_single_partition_sort(spark):
     # G bound, so the byte proxy governs and the r10 single-partition
     # sort replaces the range sort (the measured sf1 regression —
     # having_filter 0.47→2.44 s — is exactly what this protects).
-    key = os.path.abspath(SF)
-    q.load_views(spark, SF)
-    saved = q._CORPUS_BYTES.get(key)
-    try:
-        q._CORPUS_BYTES[key] = q._SERIAL_FINAL_MAX_BYTES
+    with forced_policy(spark, SF, total=ScalePolicy.small):
         df = q.single_partition_sort(spark, spark.sql("""
             SELECT o_custkey % 7 AS k, count(*) AS n
             FROM orders GROUP BY o_custkey % 7 ORDER BY k
@@ -179,53 +185,31 @@ def test_mid_corpus_unknown_cardinality_keeps_single_partition_sort(spark):
         plan = _plan(df)
         assert "Exchange SinglePartition" in plan
         assert "rangepartitioning" not in plan
-    finally:
-        if saved is not None:
-            q._CORPUS_BYTES[key] = saved
 
 
 def test_small_corpus_high_cardinality_falls_back(spark):
     # A small corpus (passes the byte gate) whose grouping column has
     # a huge NDV: the r11 byte-only gate would have taken a 1-task
     # fold over millions of groups; the cardinality gate must reject
-    # it. Simulated by priming the NDV cache with a 10 M-group column
-    # on a 20 MiB corpus.
-    key = os.path.abspath(SF)
-    q.load_views(spark, SF)
-    saved_bytes = q._CORPUS_BYTES.get(key)
-    saved_ndv = q._NDV_CACHE.get((key, "o_custkey"))
-    try:
-        q._CORPUS_BYTES[key] = 20 << 20
-        q._NDV_CACHE[(key, "o_custkey")] = 10_000_000
+    # it. Simulated by priming the (fresh) policy's statistics memo
+    # with a 10 M-group column on the small fixture corpus.
+    with forced_policy(spark, SF, ndv={"o_custkey": 10_000_000}) as policy:
+        assert policy.small_corpus
         df = q.single_partition_sort(
             spark, spark.sql(q.ORACLES["having_filter"]), SF
         )
         plan = _plan(df)
         assert "Exchange SinglePartition" in plan
         assert "rangepartitioning" not in plan
-    finally:
-        if saved_bytes is not None:
-            q._CORPUS_BYTES[key] = saved_bytes
-        if saved_ndv is not None:
-            q._NDV_CACHE[(key, "o_custkey")] = saved_ndv
-        else:
-            q._NDV_CACHE.pop((key, "o_custkey"), None)
 
 
 def test_large_corpus_keeps_range_sort(spark):
-    # simulate a cluster-scale corpus: the gate reads _CORPUS_BYTES
-    key = os.path.abspath(SF)
-    q.load_views(spark, SF)
-    saved = q._CORPUS_BYTES.get(key)
-    try:
-        q._CORPUS_BYTES[key] = q._AQE_MIN_BYTES
+    # simulate a cluster-scale corpus: the gate reads the policy
+    with forced_policy(spark, SF, total=ScalePolicy.cutover):
         df = q.single_partition_sort(
             spark, spark.sql(q.ORACLES["having_filter"]), SF
         )
         assert "rangepartitioning" in _plan(df)
-    finally:
-        if saved is not None:
-            q._CORPUS_BYTES[key] = saved
 
 
 def test_window_chain_collapses_to_one_exchange(spark):

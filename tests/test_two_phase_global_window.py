@@ -4,8 +4,6 @@ table above the corpus cutover — they switch to the two-phase global
 rank (operators/prefix_sum.two_phase_row_number), value-identical to
 the windowed form."""
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,6 +12,8 @@ from citus_spark.operators.prefix_sum import (
     ntile_from_rank,
     two_phase_row_number,
 )
+from citus_spark.scale import ScalePolicy
+from tests.conftest import forced_policy
 
 
 @pytest.fixture()
@@ -23,16 +23,11 @@ def sf_dir():
 
 @pytest.fixture()
 def force_above_cutover(spark, sf_dir):
-    """Make corpus_above_cutover(sf_dir) return True for the fixture
-    dir, restoring the real byte count (and the corpus confs derived
-    from it) afterward."""
-    key = os.path.abspath(sf_dir)
-    q.load_views(spark, sf_dir)  # populate the real cached total
-    real = q._CORPUS_BYTES[key]
-    q._CORPUS_BYTES[key] = q._AQE_MIN_BYTES
-    yield
-    q._CORPUS_BYTES[key] = real
-    q.load_views(spark, sf_dir)  # re-apply the small-corpus confs
+    """Run the test with the fixture corpus's policy above the cutover
+    (so corpus_above_cutover(sf_dir) is True), restoring the real
+    policy and its confs afterward."""
+    with forced_policy(spark, sf_dir, total=ScalePolicy.cutover):
+        yield
 
 
 def _rows(df):

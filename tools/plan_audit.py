@@ -13,10 +13,15 @@ Prints one line per entry plus a summary of flagged entries. Exit 0
 always — this is a survey tool; gates live in tests/test_plan_quality.
 
 Usage: python tools/plan_audit.py [sf_dir] [--json out.json]
+
+The corpus's ScalePolicy (fields, fingerprint, gate sides and confs)
+heads the output, so an audit shows which side of each scale gate it
+ran on; the JSON file is {"policy": ..., "entries": {name: audit}}.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import re
@@ -87,6 +92,15 @@ def main() -> None:
     import citus_spark.queries as q
 
     spark = get_spark("citus_spark_plan_audit")
+    # which side of each scale gate this audit ran on
+    p = q.scale_policy(spark, sf_dir)
+    policy = {
+        **dataclasses.asdict(p),
+        "above_cutover": p.above_cutover,
+        "small_corpus": p.small_corpus,
+        **p.confs(),
+    }
+    print("policy", json.dumps(policy))
     results: dict[str, dict] = {}
     for name, fn in q.QUERIES.items():
         if only and name not in only:
@@ -111,7 +125,7 @@ def main() -> None:
         print("FLAG", name, json.dumps(r))
     if json_out:
         with open(json_out, "w") as fh:
-            json.dump(results, fh, indent=1)
+            json.dump({"policy": policy, "entries": results}, fh, indent=1)
 
 
 if __name__ == "__main__":

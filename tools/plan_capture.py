@@ -7,11 +7,14 @@ explicitly listed names) at $SPARK_GRAFT_SF_DIR. Plans are captured
 without executing the query (below the AQE cutover the static physical
 plan IS the executed plan; above it the file records the initial
 adaptive plan, which still shows join strategy / exchange placement /
-pushed filters).
+pushed filters). Each file's first line is the corpus's ScalePolicy
+(fields, fingerprint, gate sides and confs).
 """
 
 from __future__ import annotations
 
+import dataclasses
+import json
 import os
 import sys
 
@@ -36,6 +39,14 @@ def main() -> None:
     import citus_spark.queries as q
 
     spark = get_spark("citus_spark_plan_capture")
+    # which side of each scale gate the plans were captured on
+    p = q.scale_policy(spark, sf_dir)
+    policy = json.dumps({
+        **dataclasses.asdict(p),
+        "above_cutover": p.above_cutover,
+        "small_corpus": p.small_corpus,
+        **p.confs(),
+    })
     for name in names:
         df = q.QUERIES[name](spark, sf_dir)
         plan = df._jdf.queryExecution().explainString(
@@ -45,7 +56,7 @@ def main() -> None:
         )
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
-            fh.write(plan)
+            fh.write(f"-- scale policy: {policy}\n{plan}")
         print(f"wrote {path} ({plan.count('Exchange')} Exchange lines)")
 
 
